@@ -250,7 +250,8 @@ def main() -> None:
             dedup_minhash_lsh vs 2.0 s isolated), so the scaling ratio is
             taken from symmetric isolated runs; the co-tenant bench
             timing stays in `queries` as `bench_sec`."""
-            child_detail = tempfile.mktemp(prefix="bench_scaling_", suffix=".json")
+            fd, child_detail = tempfile.mkstemp(prefix="bench_scaling_", suffix=".json")
+            os.close(fd)
             env = dict(os.environ)
             env.update(
                 {
@@ -262,17 +263,20 @@ def main() -> None:
                 }
             )
             env.pop("SPARK_GRAFT_BENCH_SCALING", None)  # no recursion
-            for attempt in range(2):  # one retry on a crashed child
-                p = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__)],
-                    capture_output=True,
-                    text=True,
-                    env=env,
-                )
-                if p.returncode == 0 and os.path.exists(child_detail):
-                    with open(child_detail) as fh:
-                        return json.load(fh).get("queries", {}).get(name)
-            return {"error": (p.stderr or p.stdout)[-200:], "rc": p.returncode}
+            try:
+                for attempt in range(2):  # one retry on a crashed child
+                    p = subprocess.run(
+                        [sys.executable, os.path.abspath(__file__)],
+                        capture_output=True,
+                        text=True,
+                        env=env,
+                    )
+                    if p.returncode == 0 and os.path.getsize(child_detail):
+                        with open(child_detail) as fh:
+                            return json.load(fh).get("queries", {}).get(name)
+                return {"error": (p.stderr or p.stdout)[-200:], "rc": p.returncode}
+            finally:
+                os.unlink(child_detail)
 
         sq = {}
         for n in probes:
@@ -346,7 +350,7 @@ def main() -> None:
         # effective parallelism on the record (VERDICT r15 #2: the driver
         # could not verify $SPARK_GRAFT_CPUS was honored from the artifact
         # alone) — read back from the LIVE session, not the env var
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8)),
+        "cpus": spark.sparkContext.defaultParallelism,
         "master": spark.sparkContext.master,
         "duckdb_total": detail["duckdb_total"],
         "protocol": "warmrep-median",

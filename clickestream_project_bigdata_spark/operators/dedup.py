@@ -276,20 +276,6 @@ def word_shingles(text: Column, n: int = 2) -> Column:
     return shingles_from_tokens(tokens_col(text), n)
 
 
-def minhash_from_shingles(shingles: Column, num_hashes: int = 64) -> Column:
-    """K independent minhashes: min over shingles of ``xxhash64(seed_j, s)``.
-    All Catalyst expressions — K codegen'd passes over the array.
-
-    IMPORTANT: pass a *materialized column* (select the shingle array into its
-    own projection first). Inlining the shingle-construction expression here
-    would rebuild the array K times per row — measured 20× slower at sf0.1.
-    """
-    def one_hash(j: int) -> Column:
-        return F.array_min(F.transform(shingles, lambda s: F.xxhash64(F.lit(j), s)))
-
-    return F.array(*[one_hash(j) for j in range(num_hashes)])
-
-
 #: Affine-permutation constants for the numpy minhash family: g_j(h) =
 #: A[j]·h + B[j] (mod 2⁶⁴). Odd multipliers → bijections; seeds fixed for
 #: reproducibility across runs/workers.
@@ -355,7 +341,6 @@ def minhash_signatures(
     shingle_n: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    method: str = "pandas",
     hash: str = "xx",
 ) -> DataFrame:
     """(id, minhash) — staged projections so each intermediate (tokens,
@@ -363,12 +348,10 @@ def minhash_signatures(
     keeps the boundaries when collapsing would duplicate non-cheap
     expressions).
 
-    ``method="pandas"`` (default): each shingle is hashed ONCE JVM-side,
-    then the K-permutation min runs as a vectorized numpy broadcast in
-    ``mapInPandas`` — higher-order Catalyst folds evaluate interpreted
-    per-element and were measured 3-4× slower for K=64. ``method="sql"``
-    keeps the pure-Catalyst fold (zero Python, for environments where the
-    Arrow path is unavailable).
+    Each shingle is hashed ONCE JVM-side, then the K-permutation min runs
+    as a vectorized numpy broadcast in ``mapInPandas`` — higher-order
+    Catalyst folds evaluate interpreted per-element and were measured 3-4×
+    slower for K=64.
 
     ``hash="xx"`` (default): xxhash64 base hashes — fastest, Spark-only.
     ``hash="portable"``: md5-derived 31-bit base hashes + mod-(2³¹−1)
@@ -384,35 +367,11 @@ def minhash_signatures(
     base = (
         (lambda s: phash60(s) % P31) if hash == "portable" else (lambda s: F.xxhash64(s))
     )
-    if method == "pandas":
-        hashed = staged.select(
-            F.col(id_col),
-            F.transform(F.col("shingles"), base).alias("__sh_hashes"),
-        )
-        return _minhash_pandas(hashed, num_hashes, id_col, hash)
-    if hash == "portable":
-        a_co, b_co = minhash_seeds(num_hashes)
-        hashed = staged.select(
-            F.col(id_col), F.transform(F.col("shingles"), base).alias("__sh_hashes")
-        )
-        return hashed.select(
-            F.col(id_col),
-            F.array(
-                *[
-                    F.array_min(
-                        F.transform(
-                            "__sh_hashes",
-                            lambda h, j=j: (F.lit(a_co[j]) * h + F.lit(b_co[j])) % F.lit(P31),
-                        )
-                    )
-                    for j in range(num_hashes)
-                ]
-            ).alias("minhash"),
-        )
-    return staged.select(
+    hashed = staged.select(
         F.col(id_col),
-        minhash_from_shingles(F.col("shingles"), num_hashes).alias("minhash"),
+        F.transform(F.col("shingles"), base).alias("__sh_hashes"),
     )
+    return _minhash_pandas(hashed, num_hashes, id_col, hash)
 
 
 def minhash_lsh_pairs(
@@ -885,54 +844,19 @@ def duplicate_clusters(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash_bit_sums(tokens: Column, bits: int = 64, hash: str = "xx") -> Column:
-    """Per-bit ±1 sums over token hashes — one fold over the token array
-    carrying an int-array accumulator, all in codegen. (Shift amounts must be
-    Python ints for Catalyst's shiftright, hence the unrolled array.)"""
-    def bit_vec(t: Column) -> Column:
-        h = phash60(t) if hash == "portable" else F.xxhash64(t)
-        return F.array(
-            *[
-                F.when(F.shiftright(h, i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-                for i in range(bits)
-            ]
-        )
-
-    return F.aggregate(
-        tokens,
-        F.array_repeat(F.lit(0), bits),
-        lambda a, t: F.zip_with(a, bit_vec(t), lambda x, y: x + y),
-    )
-
-
-def _pack_bits(acc_col: Column, bits: int = 64) -> Column:
-    """bit i = 1 iff acc[i] > 0, packed into one signed 64-bit long."""
-    out = F.lit(0).cast("long")
-    for i in range(bits):
-        out = out + F.when(
-            F.element_at(acc_col, i + 1) > 0,
-            F.shiftleft(F.lit(1).cast("long"), i),
-        ).otherwise(F.lit(0).cast("long"))
-    return out
-
-
 def simhash_signatures(
     docs: DataFrame,
     bits: int = 64,
     text_col: str = "text",
     id_col: str = "doc_id",
-    method: str = "pandas",
     hash: str = "xx",
 ) -> DataFrame:
     """Classic SimHash: ``bits``-wide signature per document.
 
-    ``method="pandas"`` (default): tokens are hashed ONCE JVM-side, then
-    the per-bit ±1 sums + sign-pack run as vectorized numpy bit math in
-    ``mapInPandas``. Same base hash as the Catalyst path → **bit-identical
-    signatures**, ~3× faster (the Catalyst fold builds a 64-wide when()
-    array per token, evaluated interpreted). ``method="sql"`` keeps the
-    pure-Catalyst fold (two-step select so the accumulator is materialized
-    once, not inlined 64×).
+    Tokens are hashed ONCE JVM-side, then the per-bit ±1 sums + sign-pack
+    run as vectorized numpy bit math in ``mapInPandas`` — ~3× faster than
+    a Catalyst fold, which builds a 64-wide when() array per token,
+    evaluated interpreted.
 
     ``hash="portable"``: md5-derived 60-bit base hashes — use ``bits=60``
     with it (the hash has no entropy above bit 59); signatures are then
@@ -940,19 +864,11 @@ def simhash_signatures(
     base = (
         (lambda t: phash60(t)) if hash == "portable" else (lambda t: F.xxhash64(t))
     )
-    if method == "pandas":
-        hashed = docs.select(
-            F.col(id_col),
-            F.transform(tokens_col(F.col(text_col)), base).alias("__tok_hashes"),
-        )
-        return _simhash_pandas(hashed, bits, id_col)
-    return (
-        docs.select(
-            F.col(id_col),
-            simhash_bit_sums(tokens_col(F.col(text_col)), bits, hash).alias("__acc"),
-        )
-        .select(F.col(id_col), _pack_bits(F.col("__acc"), bits).alias("simhash"))
+    hashed = docs.select(
+        F.col(id_col),
+        F.transform(tokens_col(F.col(text_col)), base).alias("__tok_hashes"),
     )
+    return _simhash_pandas(hashed, bits, id_col)
 
 
 def _simhash_pandas(docs_hashed: DataFrame, bits: int, id_col: str) -> DataFrame:

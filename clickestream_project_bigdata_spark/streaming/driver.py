@@ -19,6 +19,8 @@ most_viewed_items.
 
 from __future__ import annotations
 
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -26,6 +28,16 @@ from pyspark.sql.streaming import StreamingQuery
 from ..operators import analytics
 from ..operators.sessionize import DEFAULT_GAP_SECONDS, session_metrics, sessionize
 from .sinks import Sink
+
+
+def _wait_or_raise(futures: set[Future], until: Future | None = None) -> None:
+    """Block until ``until`` is done (without it, until every future is),
+    re-raising the first failure among the futures finished by then."""
+    pending = futures
+    while pending and not (until is not None and until.done()):
+        done, pending = wait(pending, return_when=FIRST_COMPLETED)
+        for f in done:
+            f.result()
 
 
 def run_all_analyses(
@@ -75,9 +87,17 @@ def run_all_analyses(
                 (analytics.item_interactions(batch_df), "item_interactions"),
                 (analytics.most_viewed_items(batch_df), "most_viewed_items"),
             ]
+
+            def write(df: DataFrame, table: str) -> None:
+                try:
+                    sink.write(df, table, batch_id)
+                except Exception as exc:
+                    exc.add_note(f"sink table {table!r}, batch {batch_id}")
+                    raise
+
             if max_parallel_sinks <= 1:
                 for df, table in outputs:
-                    sink.write(df, table, batch_id)
+                    write(df, table)
             else:
                 # materialize each shared input ONCE before its consumers
                 # fan out (concurrent jobs then hit the cache instead of
@@ -87,26 +107,30 @@ def run_all_analyses(
                 # its fill runs as a pool task OVERLAPPED with the seven
                 # batch-fed analyses and the session sinks are submitted
                 # the moment it completes (r16; guide §2.6 back-fill —
-                # measured 2.49 s -> 2.06 s at sf0.1/32 cores).
+                # measured 2.49 s -> 2.06 s at sf0.1/32 cores). The first
+                # failure stops the fan-out: queued writes are cancelled and
+                # the session sinks are never submitted after it.
                 session_tables = {"sessions", "user_paths", "funnel_analysis"}
                 batch_df.count()
-                from concurrent.futures import ThreadPoolExecutor
-
                 with ThreadPoolExecutor(max_workers=max_parallel_sinks) as pool:
-                    sess_ready = pool.submit(sessionized.count)
-                    futures = [
-                        pool.submit(sink.write, df, table, batch_id)
-                        for df, table in outputs
-                        if table not in session_tables
-                    ]
-                    sess_ready.result()  # cache filled; propagate failure
-                    futures += [
-                        pool.submit(sink.write, df, table, batch_id)
-                        for df, table in outputs
-                        if table in session_tables
-                    ]
-                    for f in futures:
-                        f.result()  # propagate the first failure
+                    try:
+                        sess_ready = pool.submit(sessionized.count)
+                        futures = {sess_ready} | {
+                            pool.submit(write, df, table)
+                            for df, table in outputs
+                            if table not in session_tables
+                        }
+                        _wait_or_raise(futures, until=sess_ready)
+                        sess_ready.result()  # cache filled; propagate failure
+                        futures |= {
+                            pool.submit(write, df, table)
+                            for df, table in outputs
+                            if table in session_tables
+                        }
+                        _wait_or_raise(futures)
+                    except BaseException:
+                        pool.shutdown(wait=False, cancel_futures=True)
+                        raise
         finally:
             sessionized.unpersist()
     finally:

@@ -5,6 +5,8 @@ production pipeline needs when a partition, day, or filter comes up empty.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -110,11 +112,24 @@ def test_null_text_documents_flow_through(spark):
 def test_driver_contract_keys_aligned():
     """Every queries() entry has an oracle_sql() twin and vice versa — the
     correctness gate covers the WHOLE query surface (a query added without
-    its oracle would silently skip the value-hash check)."""
+    its oracle would silently skip the value-hash check). The registry holds
+    one record per name, the sampling order names only registered queries,
+    and every declared table is a file of the smallest fixture (checked on
+    the filesystem, no Spark job)."""
     import __spark_entry__ as e
 
     q, o = set(e.queries()), set(e.oracle_sql())
     assert q == o, (sorted(q - o), sorted(o - q))
+    names = [r.name for r in e._QUERIES]
+    assert len(names) == len(set(names)), sorted({n for n in names if names.count(n) > 1})
+    assert set(e._SAMPLING_PRIORITY) <= set(names), sorted(set(e._SAMPLING_PRIORITY) - set(names))
+    # events_raw is the events file read as stored, without the canonical mapping
+    files = {(r.name, {"events_raw": "events"}.get(t, t)) for r in e._QUERIES for t in r.tables}
+    missing = [
+        (name, f) for name, f in sorted(files)
+        if not os.path.isfile(os.path.join("/root/testdata/sf0.001", f"{f}.parquet"))
+    ]
+    assert not missing, missing
 
 
 def test_round6_operators_on_empty_inputs(spark, empty_events, empty_docs, empty_embeddings):

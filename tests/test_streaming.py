@@ -339,6 +339,35 @@ def test_parallel_fanout_matches_sequential(spark, one_batch_events):
         assert sorted(map(tuple, seq.rows(table))) == sorted(map(tuple, par.rows(table))), table
 
 
+@pytest.mark.parametrize("max_parallel_sinks", [1, 2])
+def test_fanout_fails_fast_and_names_table(spark, one_batch_events, max_parallel_sinks):
+    """A failed sink write stops the fan-out: the error names the table, and
+    the session sinks never start. In parallel mode they are submitted only
+    once the sessionized cache is filled; the failing write raises before
+    any Spark job, so it finishes long before the cache-fill job it races."""
+    from clickestream_project_bigdata_spark.streaming.driver import run_all_analyses
+
+    class FailingSink(MemorySink):
+        def write(self, df, table, batch_id=None):
+            if table == "events_per_minute":
+                raise RuntimeError("sink down")
+            super().write(df, table, batch_id)
+
+    wire_df = spark.createDataFrame(
+        [tuple(r[k] for k in r) for r in one_batch_events],
+        "timestamp string, visitorid string, event string, itemid string, "
+        "transactionid string, event_category string, unix_timestamp string",
+    )
+    sink = FailingSink()
+    with pytest.raises(RuntimeError, match="sink down") as info:
+        run_all_analyses(
+            canonicalize(wire_df), 0, sink,
+            funnel_steps=["view", "click", "purchase"], max_parallel_sinks=max_parallel_sinks,
+        )
+    assert any("events_per_minute" in note for note in info.value.__notes__)
+    assert not {"sessions", "user_paths", "funnel_analysis"} & set(sink.tables)
+
+
 def test_checkpoint_recovery_processes_only_new_files(spark, tmp_path):
     """Restart-from-checkpoint semantics: a second availableNow run over the
     same checkpoint sees ONLY files added after the first run — batches are
